@@ -13,6 +13,7 @@ staging tiers (FileDbDAL/__init__.py:40-48).
 from __future__ import annotations
 
 import base64
+import bisect
 import hashlib
 import json
 import logging
@@ -21,6 +22,7 @@ import shutil
 import threading
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -309,6 +311,109 @@ def _zone_comparable(a, b) -> bool:
     return _num(a) and _num(b)
 
 
+class _Probe:
+    """What a pruned read asks of one column: can a unit (a manifest
+    segment or a bucketed data file) hold a row whose value lies in
+    one of `intervals`, equals one of the point `keys`, or — with
+    `want_nulls`, or a None among `keys` — is NULL? An interval is
+    (lo, hi, hi_open): a None bound is unbounded, and `hi_open` makes
+    the upper bound exclusive (read_prefix's [prefix, prefix⁺)).
+    `hash_of` hashes a raw key exactly as the stats writer hashed the
+    column; each key is hashed at most once, and only when a bloom
+    digest is consulted."""
+
+    def __init__(self, intervals=(), keys=(), want_nulls=False, hash_of=None):
+        self.intervals = [
+            (_stats_probe(lo), _stats_probe(hi), hi_open)
+            for lo, hi, hi_open in intervals
+        ]
+        vals = [v for v in keys if v is not None]
+        self.want_nulls = want_nulls or len(vals) < len(keys)
+        #: zone-map representation -> raw literal (what gets hashed)
+        self._raw = {_stats_probe(v): v for v in vals}
+        norm = list(self._raw)
+        if all(isinstance(v, str) for v in norm) or all(_num(v) for v in norm):
+            self._sorted, self._other = sorted(norm), []
+        else:
+            self._sorted, self._other = [], norm  # mixed kinds: no order
+        self._hash_of = hash_of
+        self._hashes: dict = {}
+
+    def keys_in(self, zmin, zmax) -> list:
+        """The keys a unit with zone range [zmin, zmax] may hold (all
+        keys when zmin/zmax is None: no zone map recorded)."""
+        s = self._sorted
+        if s and _zone_comparable(s[0], zmin) and _zone_comparable(s[0], zmax):
+            s = s[bisect.bisect_left(s, zmin) : bisect.bisect_right(s, zmax)]
+        return s + self._other
+
+    def in_bloom(self, keys: list, bloom: dict) -> bool:
+        """Does the digest admit at least one of `keys`?"""
+        bmp = base64.b64decode(bloom["bits"])
+        for v in keys:
+            if v not in self._hashes:
+                self._hashes[v] = self._hash_of(self._raw[v])
+            if all(
+                bmp[p >> 3] & (1 << (p & 7))
+                for p in _bloom_positions(self._hashes[v], bloom["m"], bloom["k"])
+            ):
+                return True
+        return False
+
+
+def _overlaps(zmin, zmax, lo, hi, hi_open: bool) -> bool:
+    """Can the zone range [zmin, zmax] meet the interval? True whenever
+    a bound and the range are not cleanly comparable."""
+    if lo is not None and _zone_comparable(lo, zmax) and zmax < lo:
+        return False
+    if hi is not None and _zone_comparable(hi, zmin):
+        return not (zmin >= hi if hi_open else zmin > hi)
+    return True
+
+
+def _skip_reason(st: dict | None, probe: _Probe) -> str | None:
+    """THE data-skipping decision, and the only reader of a stats
+    entry's min/max/nulls/bloom fields: None when a unit whose stats
+    on the probed column are `st` may hold a match for `probe`, else
+    why it provably holds none — "zone" (the value range or the null
+    count refutes it) or "bloom" (the digest refutes every key left
+    in range). A unit with no entry, a bloom-only entry (no zone map)
+    or bounds it cannot compare is never skipped on that account.
+    Digests never answer a NULL probe — the null count does (the
+    writer sets no bits for NULL rows)."""
+    if st is None:
+        return None
+    zoned = "min" in st
+    if probe.want_nulls and (not zoned or st["nulls"] > 0):
+        return None
+    zmin, zmax = st.get("min"), st.get("max")
+    if zoned and zmin is None and zmax is None:
+        return "zone"  # all-NULL (or empty) unit: no non-null value
+    if any(not zoned or _overlaps(zmin, zmax, *iv) for iv in probe.intervals):
+        return None
+    cand = probe.keys_in(zmin, zmax)
+    if not cand:
+        return "zone"
+    if "bloom" not in st or probe.in_bloom(cand, st["bloom"]):
+        return None
+    return "bloom"
+
+
+def _prune(units: list, stats_of, probe: _Probe, report: dict) -> list:
+    """The units `_skip_reason` cannot rule out, counting each skip
+    under report["<reason>_skipped"] and each kept unit under
+    report["scanned"]."""
+    kept = []
+    for u in units:
+        why = _skip_reason(stats_of(u), probe)
+        if why is None:
+            kept.append(u)
+            report["scanned"] += 1
+        else:
+            report[f"{why}_skipped"] += 1
+    return kept
+
+
 class TableStore:
     def __init__(
         self,
@@ -530,15 +635,14 @@ class TableStore:
 
     # -- per-data-file skipping stats (bucketed generations) -------------------
     # A bucketed generation's data files carry a `_FILESTATS.json`
-    # sidecar ({file_basename: {col: {min, max, nulls, bloom?}}}) for
-    # the BUCKET_FILE_STATS columns — the per-file half of the
-    # manifest zone/bloom story (Delta per-file stats / Iceberg
-    # column metrics at file granularity). Delta commits stat their
+    # sidecar ({file_basename: {col: stats entry}}) for the
+    # BUCKET_FILE_STATS columns: the per-file half of the data-skipping
+    # story (Delta per-file stats / Iceberg column metrics at file
+    # granularity). Entries come from the one stats writer
+    # (_column_stats, grouped by data file) and are read only by the
+    # one prune decision (_skip_reason). Delta commits stat their
     # O(changes) stage files; hardlinked base files inherit the prior
     # generation's entries verbatim (the bytes are the same inode).
-    # read_bucketed_pruned() consults the sidecar to scan only the
-    # files that can hold some probe key — pure metadata, no data
-    # file opened for the rest.
 
     _FILESTATS_FILE = "_FILESTATS.json"
     #: per-file blooms use a smaller bits/key than segment blooms (16
@@ -578,20 +682,12 @@ class TableStore:
             json.dump(stats, fh)
         os.replace(tmp, self._filestats_path(gen_dir))
 
-    def _per_file_stats(
-        self, name: str, data_dir: str, cols: list[str]
-    ) -> dict:
-        """Zone maps + bloom digests PER DATA FILE of `data_dir` for
-        `cols`: one grouped aggregate pass (min/max/nulls/distinct per
-        file) plus, per column, one distributive bit-position
-        aggregation (each value's xxhash64 expands to its k positions
-        JVM-side; only distinct positions per file reach the driver).
-        All files of one pass share a digest width m sized from the
-        largest per-file key count (bounded by _FILE_BLOOM_MAX_KEYS —
-        files beyond the cap record zone-only stats). Cost is O(rows
-        in data_dir): O(changes) when statting a delta stage, O(table)
-        only inside an already-O(table) clean rewrite."""
-        k = self._BLOOM_K
+    def _stat_data_files(self, name: str, data_dir: str, cols: list[str]) -> dict:
+        """Sidecar entries for every data file of `data_dir`: the stats
+        writer with one unit per file, zone maps and digests on `cols`.
+        Cost is O(rows in data_dir): O(changes) when statting a delta
+        stage, O(table) only inside an already-O(table) clean
+        rewrite."""
         df = (
             self.spark.read.schema(self._bucket_phys_schema(name))
             .parquet(data_dir)
@@ -599,110 +695,27 @@ class TableStore:
                 "__f", F.element_at(F.split(F.input_file_name(), "/"), -1)
             )
         )
-        aggs: list = []
-        for c in cols:
-            aggs += [
-                F.min(c).alias(f"mn__{c}"),
-                F.max(c).alias(f"mx__{c}"),
-                (F.count(F.lit(1)) - F.count(c)).alias(f"nl__{c}"),
-                F.count_distinct(F.xxhash64(c)).alias(f"nd__{c}"),
-            ]
-        zone_rows = df.groupBy("__f").agg(*aggs).collect()
-        out: dict[str, dict] = {}
-        bloom_m: dict[str, int] = {}
-        for c in cols:
-            eligible = [
-                int(r[f"nd__{c}"])
-                for r in zone_rows
-                if 0 < int(r[f"nd__{c}"]) <= self._FILE_BLOOM_MAX_KEYS
-            ]
-            if eligible:
-                nbits = max(
-                    64, max(eligible) * self._FILE_BLOOM_BITS_PER_KEY
-                )
-                bloom_m[c] = 1 << (nbits - 1).bit_length()
-        for r in zone_rows:
-            ent: dict = {}
-            for c in cols:
-                mn, mx = _stats_probe(r[f"mn__{c}"]), _stats_probe(r[f"mx__{c}"])
-                for v in (mn, mx):
-                    if v is not None and not isinstance(v, (int, float, str)):
-                        raise TypeError(
-                            f"per-file stats on {c!r}: unsupported type "
-                            f"{type(v).__name__}"
-                        )
-                ent[c] = {
-                    "min": mn,
-                    "max": mx,
-                    "nulls": int(r[f"nl__{c}"]),
-                }
-            out[r["__f"]] = ent
-        def _bloom_for(c: str, m: int) -> tuple[str, int, list]:
-            # only ELIGIBLE files (0 < nd <= cap) ever record a digest,
-            # so drop over-cap files' rows BEFORE the explode: a clean
-            # rewrite's big files would otherwise pay k position
-            # expansions per row just to be discarded at the driver
-            eligible_files = [
-                r["__f"]
-                for r in zone_rows
-                if 0 < int(r[f"nd__{c}"]) <= self._FILE_BLOOM_MAX_KEYS
-            ]
-            if not eligible_files:
-                return c, m, []
-            pos_expr = (
-                f"transform(sequence(0, {k - 1}), i -> "
-                f"pmod((xxhash64({c}) & 4294967295) + "
-                f"i * (shiftrightunsigned(xxhash64({c}), 32) | 1), {m}))"
-            )
-            return c, m, (
-                df.where(F.col(c).isNotNull() & F.col("__f").isin(eligible_files))
-                .select("__f", F.explode(F.expr(pos_expr)).alias("p"))
-                .groupBy("__f")
-                .agg(F.collect_set("p").alias("ps"))
-                .collect()
-            )
-
-        # per-column digest jobs are independent — overlap them from a
-        # small thread pool (guide §2.6) so the stats pass costs
-        # zone + max(col) instead of zone + sum(cols)
-        if len(bloom_m) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            # capped: one concurrent Spark job per digest column is
-            # oversubscription past a few (ADVICE r10)
-            with ThreadPoolExecutor(max_workers=min(len(bloom_m), 4)) as pool:
-                results = list(pool.map(lambda cm: _bloom_for(*cm), bloom_m.items()))
-        else:
-            results = [_bloom_for(c, m) for c, m in bloom_m.items()]
-        for c, m, pos_rows in results:
-            for r in pos_rows:
-                bmp = bytearray(m // 8)
-                for p in r["ps"]:
-                    bmp[p >> 3] |= 1 << (p & 7)
-                out[r["__f"]][c]["bloom"] = {
-                    "m": m,
-                    "k": k,
-                    "bits": base64.b64encode(bytes(bmp)).decode(),
-                }
-        return out
+        return self._column_stats(
+            df, cols, cols, "__f",
+            self._FILE_BLOOM_BITS_PER_KEY, self._FILE_BLOOM_MAX_KEYS,
+        )
 
     def read_bucketed_pruned(
         self, name: str, col: str, keys: list, include_nulls: bool = False
     ) -> tuple[DataFrame, dict[str, int]]:
         """Key-pruned SUPERSET read of a bucketed table: scan only the
-        data files whose recorded per-file stats (zone range by value
-        order, bloom digest by membership) can hold SOME key in
-        `keys` on `col` — pure metadata, no other file is opened.
-        Deletion vectors still apply, so the result is exactly what a
-        full read restricted to those files would return; NO row
-        filter is applied (callers compose their own predicates — the
-        read_pruned contract at file granularity). Files without a
-        recorded entry are always scanned, so the read is sound across
-        commits that predate the sidecar. Falls back to the full
-        read() when the table isn't bucketed, has no sidecar, or the
-        probe exceeds _FILE_PRUNE_MAX_KEYS. Returns (df, {mode, total,
-        zone_skipped, bloom_skipped, scanned})."""
-        full_report = {
+        data files whose `_FILESTATS.json` entry on `col` the prune
+        decision (_skip_reason) cannot rule out for `keys` (a None key,
+        or `include_nulls`, also asks for NULLs) — pure metadata, no
+        other file is opened. Deletion vectors still apply; NO row
+        filter is applied (the read_pruned contract at file
+        granularity). Files without an entry are always scanned, so
+        the read is sound across commits that predate the sidecar.
+        Falls back to the full read() when the table isn't bucketed,
+        has no sidecar, or the probe exceeds _FILE_PRUNE_MAX_KEYS.
+        Returns (df, {mode, total, zone_skipped, bloom_skipped,
+        scanned})."""
+        report = {
             "mode": "full",
             "total": 0,
             "zone_skipped": 0,
@@ -711,10 +724,7 @@ class TableStore:
         }
         cur = self._current(name)
         if cur is None:
-            return (
-                local_df(self.spark, [], self.schemas[name]),
-                full_report,
-            )
+            return local_df(self.spark, [], self.schemas[name]), report
         stats = (
             self._filestats(cur)
             if self._is_bucketed(name)
@@ -722,81 +732,27 @@ class TableStore:
             and col in self.schemas[name].fieldNames()
             else None
         )
-        vals = [v for v in keys if v is not None]
-        want_nulls = include_nulls or len(vals) < len(keys)
-        if stats is None or len(vals) > self._FILE_PRUNE_MAX_KEYS:
-            full_report["total"] = full_report["scanned"] = 1
-            return self.read(name), full_report
-        import bisect
-
-        coltype = self.schemas[name][col].dataType
-        probes = sorted({_stats_probe(v) for v in vals})
-        comparable = probes and all(
-            isinstance(p, (int, float, str)) and not isinstance(p, bool)
-            for p in probes
+        n_vals = sum(1 for v in keys if v is not None)
+        if stats is None or n_vals > self._FILE_PRUNE_MAX_KEYS:
+            report["total"] = report["scanned"] = 1
+            return self.read(name), report
+        report["mode"] = "files"
+        files = [
+            os.path.join(cur, fn)
+            for fn in sorted(os.listdir(cur))
+            if not fn.startswith(("_", "."))
+            and os.path.isfile(os.path.join(cur, fn))
+        ]
+        report["total"] = len(files)
+        probe = _Probe(
+            keys=keys, want_nulls=include_nulls, hash_of=self._hasher(name, col)
         )
-        hashes: list[int] | None = None  # computed on first bloom probe
-        report = {
-            "mode": "files",
-            "total": 0,
-            "zone_skipped": 0,
-            "bloom_skipped": 0,
-            "scanned": 0,
-        }
-        kept: list[str] = []
-        for fn in sorted(os.listdir(cur)):
-            if fn.startswith(("_", ".")):
-                continue
-            p = os.path.join(cur, fn)
-            if not os.path.isfile(p):
-                continue
-            report["total"] += 1
-            st = (stats.get(fn) or {}).get(col)
-            if st is None:
-                kept.append(p)
-                report["scanned"] += 1
-                continue
-            if want_nulls and int(st.get("nulls", 0)) > 0:
-                kept.append(p)
-                report["scanned"] += 1
-                continue
-            zmin, zmax = st.get("min"), st.get("max")
-            if zmin is None and zmax is None:
-                # all-NULL (or empty) file: no non-null key can match
-                report["zone_skipped"] += 1
-                continue
-            if comparable and _zone_comparable(probes[0], zmin):
-                lo = bisect.bisect_left(probes, zmin)
-                hi = bisect.bisect_right(probes, zmax)
-                cand = probes[lo:hi]
-            else:
-                cand = probes  # not cleanly comparable: can't zone-prune
-            if not cand:
-                report["zone_skipped"] += 1
-                continue
-            bloom = st.get("bloom")
-            if bloom is not None:
-                if hashes is None:
-                    by_probe = {
-                        _stats_probe(v): self._probe_hash(v, coltype)
-                        for v in vals
-                    }
-                    hashes = by_probe
-                bmp = base64.b64decode(bloom["bits"])
-                hit = any(
-                    all(
-                        bmp[q >> 3] & (1 << (q & 7))
-                        for q in _bloom_positions(
-                            hashes[c], bloom["m"], bloom["k"]
-                        )
-                    )
-                    for c in cand
-                )
-                if not hit:
-                    report["bloom_skipped"] += 1
-                    continue
-            kept.append(p)
-            report["scanned"] += 1
+        kept = _prune(
+            files,
+            lambda p: (stats.get(os.path.basename(p)) or {}).get(col),
+            probe,
+            report,
+        )
         phys_schema = self._bucket_phys_schema(name)
         phys = (
             self.spark.read.schema(phys_schema).parquet(*kept)
@@ -1066,18 +1022,13 @@ class TableStore:
         prior = self._bucket_meta(cur) or {"waves": 0, "dvs": []}
         dvs = list(prior["dvs"])
         if metrics["updated"] or metrics["deleted"]:
-            dv = f"dv-{ns}"
-            dv_df = (
-                classified.where(F.col("__op").isin("U", "D"))
-                .select(*[F.col(f"__k_{k}").alias(k) for k in on])
-                .distinct()
+            dv = self._write_dv(
+                name,
+                classified.where(F.col("__op").isin("U", "D")).select(
+                    *[F.col(f"__k_{k}").alias(k) for k in on]
+                ),
+                metrics["updated"] + metrics["deleted"],
             )
-            n_dv = metrics["updated"] + metrics["deleted"]
-            if not (
-                self._arrow_small(n_dv)
-                and self._arrow_write_dir(dv_df, os.path.join(d, dv))
-            ):
-                dv_df.write.mode("overwrite").parquet(os.path.join(d, dv))
             dvs.append({"path": dv, "ns": ns, "keys": list(on)})
         # per-file skipping stats: hardlinked base files inherit the
         # prior sidecar's entries (same bytes); the delta stage pays
@@ -1085,7 +1036,7 @@ class TableStore:
         fcols = self._file_stat_cols(name)
         fstats = dict(self._filestats(cur) or {}) if fcols else {}
         if fcols and stage is not None:
-            fstats.update(self._per_file_stats(name, stage, fcols))
+            fstats.update(self._stat_data_files(name, stage, fcols))
         self._link_data_files(cur, gen)
         if stage is not None:
             self._link_data_files(stage, gen)
@@ -1139,11 +1090,8 @@ class TableStore:
     #: commit O(changes) with a far smaller constant. The threshold is
     #: a row-count the caller must KNOW (merge/apply_changes metrics) —
     #: unhinted writes always take the Spark path, so an O(table)
-    #: rewrite can never land on the driver. Tune with
-    #: $SPARK_GRAFT_ARROW_WRITE_ROWS (0 disables).
-    _ARROW_WRITE_MAX_ROWS = int(
-        os.environ.get("SPARK_GRAFT_ARROW_WRITE_ROWS", "65536")
-    )
+    #: rewrite can never land on the driver.
+    _ARROW_WRITE_MAX_ROWS = 65536
 
     def _arrow_write_dir(self, df: DataFrame, path: str) -> bool:
         """Driver-side single-file parquet write of a SMALL DataFrame
@@ -1185,25 +1133,49 @@ class TableStore:
         self,
         name: str,
         df: DataFrame,
-        prefix: str,
-        rows_hint: int | None = None,
-    ) -> str:
-        """Write rows as one immutable segment dir; returns its relpath.
-        `rows_hint` is an upper bound on the row count when the caller
-        knows it (merge metrics) — small hinted writes take the
-        driver-side Arrow path."""
+        zone_cols: list[str] | None,
+        bloom_cols: list[str] | None,
+        rows_hint: int | None,
+    ) -> dict:
+        """Write rows as one immutable `seg-<ns>` dir and return its
+        manifest entry: the shared commit tail of append, compact,
+        replace_where, merge and apply_changes. `rows_hint` is an upper
+        bound on the row count when the caller knows it (merge
+        metrics) — small hinted writes take the driver-side Arrow
+        path. With `zone_cols`/`bloom_cols` the entry carries
+        data-skipping stats, computed over the segment read back from
+        disk so they describe exactly the bytes a future scan sees."""
         d = self._dir(name)
         os.makedirs(d, exist_ok=True)
         cols = [f.name for f in self.schemas[name].fields]
         out = df.select(*cols)
         if name in SORT_KEYS:
             out = out.sortWithinPartitions(*SORT_KEYS[name])
-        seg = f"{prefix}-{time.time_ns()}"
+        seg = f"seg-{time.time_ns()}"
         path = os.path.join(d, seg)
         if not (self._arrow_small(rows_hint) and self._arrow_write_dir(out, path)):
             out.write.mode("overwrite").parquet(path)
         self._stamp_epoch(name, path)
-        return seg
+        entry: dict = {"path": seg}
+        if zone_cols or bloom_cols:
+            written = self.spark.read.schema(self.schemas[name]).parquet(path)
+            entry["stats"] = self._column_stats(
+                written, zone_cols or [], bloom_cols or [], None,
+                self._BLOOM_BITS_PER_KEY, self._BLOOM_MAX_KEYS,
+            )[None]
+        return entry
+
+    def _write_dv(self, name: str, keys: DataFrame, rows_hint: int | None) -> str:
+        """Write a deletion vector (the distinct key rows it masks) as
+        one `dv-<ns>` dir and return its name — through the Arrow path
+        when `rows_hint` is small, else a Spark write."""
+        dv = f"dv-{time.time_ns()}"
+        path = os.path.join(self._dir(name), dv)
+        os.makedirs(self._dir(name), exist_ok=True)
+        keys = keys.distinct()
+        if not (self._arrow_small(rows_hint) and self._arrow_write_dir(keys, path)):
+            keys.write.mode("overwrite").parquet(path)
+        return dv
 
     # -- column mapping (rename/drop without rewrite) --------------------------
     # Stable-identity schema evolution for non-bucketed tables: a
@@ -1586,8 +1558,12 @@ class TableStore:
                     return self._apply_bucket_dvs(
                         name, cur, self.spark.table(tbl)
                     )
-            except Exception:
-                pass
+            except AnalysisException as exc:
+                _LOG.warning(
+                    "read(%r): catalog table of generation %s failed (%s); "
+                    "falling back to the un-bucketed path read",
+                    name, os.path.basename(cur), exc,
+                )
         return self._read_gen(name, cur)
 
     def replace(self, name: str, df: DataFrame) -> None:
@@ -1651,7 +1627,7 @@ class TableStore:
             # extra pass inside an already-O(table) rewrite) — without
             # them every post-compact wave would scan the whole
             # rewritten base again
-            self._write_filestats(gen, self._per_file_stats(name, gen, fcols))
+            self._write_filestats(gen, self._stat_data_files(name, gen, fcols))
         return gen
 
     def vacuum(self, retain: int = 1, respect_consumers: bool = False) -> None:
@@ -1777,15 +1753,7 @@ class TableStore:
         if self.bucketing and name in BUCKET_SPECS:
             raise ValueError(f"append() on bucketed table {name!r}; use replace()")
         with _commit_lock(self.root, name):
-            seg = self._write_segment(name, df, "seg", rows_hint=rows_hint)
-            entry: dict = {"path": seg}
-            if zone_cols or bloom_cols:
-                written = self.spark.read.schema(self.schemas[name]).parquet(
-                    os.path.join(self._dir(name), seg)
-                )
-                entry["stats"] = self._segment_stats(
-                    written, zone_cols or [], bloom_cols or []
-                )
+            entry = self._write_segment(name, df, zone_cols, bloom_cols, rows_hint)
             base = self._base_doc(name)
             self._commit_manifest(
                 name,
@@ -1794,6 +1762,16 @@ class TableStore:
                     "deletes": base["deletes"],
                 },
             )
+
+    # -- data skipping: one stats writer, one prune decision ------------------
+    # The reference's B-tree indexes on dir_path, (dir_id, name),
+    # sha1_hash and next_crawl become zone maps (min/max/null count)
+    # and bloom digests recorded per unit — a manifest segment or a
+    # bucketed data file. _column_stats is the only writer of those
+    # entries and _skip_reason the only reader; every pruned read
+    # (read_point, read_prefix, read_pruned, read_bucketed_pruned) and
+    # MERGE target pruning (_merge_targets) asks it one question per
+    # unit through a _Probe.
 
     #: bloom shape: k fixed at 4 probes; m = next power of two >= 32
     #: bits per distinct value (false-positive rate ~2e-4 per segment)
@@ -1807,83 +1785,89 @@ class TableStore:
     #: on the driver.
     _BLOOM_MAX_KEYS = 8192
 
-    def _segment_stats(
-        self, df: DataFrame, zone_cols: list[str], bloom_cols: list[str]
+    def _column_stats(
+        self,
+        df: DataFrame,
+        zone_cols: list[str],
+        bloom_cols: list[str],
+        unit_col: str | None,
+        bits_per_key: int,
+        max_keys: int,
     ) -> dict:
-        """Per-segment skipping statistics: zone maps (min/max/null
-        count) for `zone_cols` and bloom digests for `bloom_cols`,
-        computed in one aggregate pass plus (per bloom column) one
-        DISTRIBUTIVE bit-position aggregation: each row's xxhash64
-        expands to its k double-hashed positions (h1 + i*h2 mod m)
-        JVM-side, and only the distinct positions — at most m, capped
-        — reach the driver. A high-cardinality append can never OOM
-        the driver the way collecting every distinct hash could;
-        above _BLOOM_MAX_KEYS distinct keys the digest is skipped
-        entirely (zone-map-only stats)."""
+        """Skipping stats of `df` per unit — the whole frame (key None)
+        when `unit_col` is None, else each value of `unit_col` (a data
+        file's name): zone maps for `zone_cols`, bloom digests for
+        `bloom_cols`. One grouped aggregate job, then per bloom column
+        one DISTRIBUTIVE bit-position job: each non-NULL value's
+        xxhash64 expands to its k double-hashed positions (h1 + i*h2
+        mod m, the JVM replica of _bloom_positions) and only the
+        distinct positions per unit reach the driver, so a
+        high-cardinality unit can never OOM it. The units of one pass
+        share a digest width m sized from the largest distinct-key
+        count at or under `max_keys`; units above it record zone maps
+        only. NULL rows set no bits: a NULL probe is answered by the
+        null count. Datetimes persist as ISO strings (lexicographic
+        order == chronological order). Returns {unit: {col: {min, max,
+        nulls, bloom?}}}."""
+        by = [unit_col] if unit_col else []
+
+        def unit(r):
+            return r[unit_col] if unit_col else None
+
         aggs: list = []
         for c in zone_cols:
             aggs += [
-                F.min(c).alias(f"zmin__{c}"),
-                F.max(c).alias(f"zmax__{c}"),
-                (F.count(F.lit(1)) - F.count(c)).alias(f"znull__{c}"),
+                F.min(c).alias(f"mn__{c}"),
+                F.max(c).alias(f"mx__{c}"),
+                (F.count(F.lit(1)) - F.count(c)).alias(f"nl__{c}"),
             ]
         for c in bloom_cols:
-            aggs.append(F.count_distinct(F.xxhash64(c)).alias(f"bn__{c}"))
-        row = df.agg(*aggs).first()
-        stats: dict = {}
-        import datetime as _dt
-
-        for c in zone_cols:
-            mn, mx = row[f"zmin__{c}"], row[f"zmax__{c}"]
-            is_ts = isinstance(mn, (_dt.datetime, _dt.date)) or isinstance(
-                mx, (_dt.datetime, _dt.date)
-            )
-            if is_ts:
-                # timestamps/dates persist as ISO strings (a tagged
-                # representation whose lexicographic order matches
-                # chronological order), so next_crawl-style schedule
-                # columns can drive manifest pruning too
-                mn, mx = _stats_probe(mn), _stats_probe(mx)
-            for v in (mn, mx):
-                if v is not None and not isinstance(v, (int, float, str)):
-                    raise TypeError(
-                        f"zone stats on {c!r}: unsupported type {type(v).__name__}"
-                    )
-            stats[c] = {
-                "min": mn,
-                "max": mx,
-                "nulls": int(row[f"znull__{c}"]),
-            }
-            if is_ts:
-                stats[c]["t"] = "ts"
+            aggs.append(F.count_distinct(F.xxhash64(c)).alias(f"nd__{c}"))
+        rows = df.groupBy(*by).agg(*aggs).collect()
+        out: dict = {unit(r): {} for r in rows}
+        for r in rows:
+            for c in zone_cols:
+                mn, mx = _stats_probe(r[f"mn__{c}"]), _stats_probe(r[f"mx__{c}"])
+                for v in (mn, mx):
+                    if v is not None and not isinstance(v, (int, float, str)):
+                        raise TypeError(
+                            f"zone stats on {c!r}: unsupported type {type(v).__name__}"
+                        )
+                out[unit(r)][c] = {"min": mn, "max": mx, "nulls": int(r[f"nl__{c}"])}
+        k = self._BLOOM_K
         for c in bloom_cols:
-            n_keys = int(row[f"bn__{c}"])
-            if n_keys > self._BLOOM_MAX_KEYS:
-                continue  # zone-map-only; digest would blow the budget
-            nbits = max(64, n_keys * self._BLOOM_BITS_PER_KEY)
+            fit = [r for r in rows if int(r[f"nd__{c}"]) <= max_keys]
+            if not fit:
+                continue
+            nbits = max(64, max(int(r[f"nd__{c}"]) for r in fit) * bits_per_key)
             m = 1 << (nbits - 1).bit_length()
-            k = self._BLOOM_K
-            # JVM-side replica of _bloom_positions: h1 = low 32 bits,
-            # h2 = high 32 bits forced odd (parity pinned in pytest)
+            h = f"xxhash64({c})"
             pos_expr = (
                 f"transform(sequence(0, {k - 1}), i -> "
-                f"pmod((xxhash64({c}) & 4294967295) + "
-                f"i * (shiftrightunsigned(xxhash64({c}), 32) | 1), {m}))"
+                f"pmod(({h} & 4294967295) + i * (shiftrightunsigned({h}, 32) | 1), {m}))"
             )
-            positions = (
-                df.select(F.explode(F.expr(pos_expr)).alias("p"))
-                .agg(F.collect_set("p"))
-                .first()[0]
+            vals = df.where(F.col(c).isNotNull())
+            if unit_col:
+                # over-cap units record no digest: drop their rows
+                # BEFORE the explode instead of expanding k positions
+                # per row only to discard them at the driver
+                vals = vals.where(F.col(unit_col).isin([unit(r) for r in fit]))
+            pos_rows = (
+                vals.select(*by, F.explode(F.expr(pos_expr)).alias("p"))
+                .groupBy(*by)
+                .agg(F.collect_set("p").alias("ps"))
+                .collect()
             )
-            bmp = bytearray(m // 8)
-            for p in positions:
-                bmp[p >> 3] |= 1 << (p & 7)
-            stats.setdefault(c, {})["bloom"] = {
-                "m": m,
-                "k": k,
-                "bits": base64.b64encode(bytes(bmp)).decode(),
-            }
-        return stats
+            for r in pos_rows:
+                bmp = bytearray(m // 8)
+                for p in r["ps"]:
+                    bmp[p >> 3] |= 1 << (p & 7)
+                out[unit(r)].setdefault(c, {})["bloom"] = {
+                    "m": m,
+                    "k": k,
+                    "bits": base64.b64encode(bytes(bmp)).decode(),
+                }
+        return out
 
     def _probe_hash(self, value, coltype: T.DataType) -> int:
         """xxhash64 of the probe literal exactly as the stats pass
@@ -1903,73 +1887,50 @@ class TableStore:
             )
         return self._probe_hash_memo[key]
 
+    def _hasher(self, name: str, col: str):
+        """A _Probe `hash_of` for `col` of table `name`."""
+        coltype = self.schemas[name][col].dataType
+        return lambda v: self._probe_hash(v, coltype)
+
+    def _read_segments_pruned(
+        self, name: str, col: str, probe: _Probe, report: dict
+    ) -> DataFrame:
+        """The current generation restricted to the manifest segments
+        `_skip_reason` cannot rule out for `probe` on `col`; fills
+        `report` (total, <reason>_skipped, scanned). Scoped filters and
+        deletion vectors of the surviving segments still apply. A plain
+        snapshot generation is one unprunable unit."""
+        cur = self._current(name)
+        if cur is None:
+            return local_df(self.spark, [], self.schemas[name])
+        doc = self._doc(cur)
+        if doc is None:
+            report["total"] = report["scanned"] = 1
+            return self._read_gen(name, cur)
+        report["total"] = len(doc["segments"])
+        kept = _prune(
+            doc["segments"],
+            lambda e: (e.get("stats") or {}).get(col),
+            probe,
+            report,
+        )
+        return self._read_gen(name, cur, keep={_seg_id(e) for e in kept})
+
     def read_point(
         self, name: str, col: str, value
     ) -> tuple[DataFrame, dict[str, int]]:
-        """Point lookup with manifest-level data skipping: consult each
-        segment's recorded zone map and bloom digest for `col` and
-        scan ONLY the segments that might contain `value` — segments
-        are pruned from pure metadata, no data file is opened (the
-        Delta data-skipping / Iceberg metrics-pruning read path).
-        Scoped filters and deletion vectors of surviving segments
-        still apply, so a skipped read returns exactly what a full
-        scan + filter would. Returns (rows, report) where report
-        counts {total, zone_skipped, bloom_skipped, scanned} — the
-        observability a 100 TB point lookup is judged by: a lookup
-        that scans 1 of 10,000 daily segments is index-grade without
-        any index structure, just honest manifest stats."""
-        cur = self._current(name)
-        if cur is None:
-            return (
-                local_df(self.spark, [], self.schemas[name]),
-                {"total": 0, "zone_skipped": 0, "bloom_skipped": 0, "scanned": 0},
-            )
-        doc = self._doc(cur)
-        pred = F.col(col).eqNullSafe(F.lit(value))
-        if doc is None:
-            return self._read_gen(name, cur).where(pred), {
-                "total": 1,
-                "zone_skipped": 0,
-                "bloom_skipped": 0,
-                "scanned": 1,
-            }
-        coltype = self.schemas[name][col].dataType
-        probe_hash: int | None = None
-        report = {
-            "total": len(doc["segments"]),
-            "zone_skipped": 0,
-            "bloom_skipped": 0,
-            "scanned": 0,
-        }
-        keep: set[str] = set()
-        for e in doc["segments"]:
-            st = (e.get("stats") or {}).get(col)
-            if st is not None and value is not None:
-                zmin, zmax = st.get("min"), st.get("max")
-                probe = _stats_probe(value) if st.get("t") == "ts" else value
-                if (
-                    zmin is not None
-                    and _zone_comparable(probe, zmin)
-                    and (probe < zmin or probe > zmax)
-                ):
-                    report["zone_skipped"] += 1
-                    continue
-                bloom = st.get("bloom")
-                if bloom is not None:
-                    if probe_hash is None:
-                        probe_hash = self._probe_hash(value, coltype)
-                    bmp = base64.b64decode(bloom["bits"])
-                    if not all(
-                        bmp[p >> 3] & (1 << (p & 7))
-                        for p in _bloom_positions(
-                            probe_hash, bloom["m"], bloom["k"]
-                        )
-                    ):
-                        report["bloom_skipped"] += 1
-                        continue
-            keep.add(_seg_id(e))
-            report["scanned"] += 1
-        return self._read_gen(name, cur, keep=keep).where(pred), report
+        """Point lookup with manifest-level data skipping: scan ONLY
+        the segments the prune decision (_skip_reason) cannot rule out
+        for `value` on `col` — pure metadata, no data file opened for
+        the rest (the Delta data-skipping / Iceberg metrics-pruning
+        read path). Returns exactly what a full scan + null-safe
+        equality filter would, plus a report {total, zone_skipped,
+        bloom_skipped, scanned}: a lookup that scans 1 of 10,000 daily
+        segments is index-grade without any index structure."""
+        report = {"total": 0, "zone_skipped": 0, "bloom_skipped": 0, "scanned": 0}
+        probe = _Probe(keys=[value], hash_of=self._hasher(name, col))
+        df = self._read_segments_pruned(name, col, probe, report)
+        return df.where(F.col(col).eqNullSafe(F.lit(value))), report
 
     @staticmethod
     def _prefix_upper(prefix: str) -> str | None:
@@ -1991,88 +1952,53 @@ class TableStore:
     ) -> tuple[DataFrame, dict[str, int]]:
         """Subtree/prefix scan with manifest-level data skipping (P5 at
         catalog scale): rows where `col` STARTS WITH `prefix`, scanning
-        only the segments whose [min, max] zone range on `col` can
-        intersect [prefix, prefix⁺) — pure metadata, no data file
-        opened for the rest. Because segments are sorted on the path
-        column at write (SORT_KEYS) and crawl waves have subtree
-        locality, a subtree query over a continuously-crawled catalog
-        opens O(matching segments), not O(history) — the engine-store
-        analog of g11's z-order range clustering, and the reference's
-        `dir_path` B-tree range scan (FileDbDAL/Directory.py). Scoped
-        filters and deletion vectors of surviving segments still
-        apply. Returns (rows, report) like read_point."""
-        cur = self._current(name)
-        pred = F.col(col).startswith(prefix)
-        if cur is None:
-            return (
-                local_df(self.spark, [], self.schemas[name]),
-                {"total": 0, "zone_skipped": 0, "scanned": 0},
-            )
-        doc = self._doc(cur)
-        if doc is None:
-            return self._read_gen(name, cur).where(pred), {
-                "total": 1,
-                "zone_skipped": 0,
-                "scanned": 1,
-            }
-        upper = self._prefix_upper(prefix)
-        report = {
-            "total": len(doc["segments"]),
-            "zone_skipped": 0,
-            "scanned": 0,
-        }
-        keep: set[str] = set()
-        for e in doc["segments"]:
-            st = (e.get("stats") or {}).get(col)
-            if st is not None:
-                zmin, zmax = st.get("min"), st.get("max")
-                # the segment's value range can only miss [prefix,
-                # upper) when stats are present; all-NULL segments
-                # (zmin None) can never satisfy startswith
-                if zmin is None:
-                    if int(st.get("nulls", 0)) > 0 and zmax is None:
-                        report["zone_skipped"] += 1
-                        continue
-                elif zmax < prefix or (upper is not None and zmin >= upper):
-                    report["zone_skipped"] += 1
-                    continue
-            keep.add(_seg_id(e))
-            report["scanned"] += 1
-        return self._read_gen(name, cur, keep=keep).where(pred), report
+        only the segments the prune decision cannot rule out for the
+        half-open interval [prefix, prefix⁺). Segments are sorted on
+        the path column at write (SORT_KEYS) and crawl waves have
+        subtree locality, so a subtree query opens O(matching
+        segments), not O(history) — the reference's `dir_path` B-tree
+        range scan (FileDbDAL/Directory.py). Returns (rows, {total,
+        zone_skipped, scanned})."""
+        report = {"total": 0, "zone_skipped": 0, "scanned": 0}
+        probe = _Probe(intervals=[(prefix, self._prefix_upper(prefix), True)])
+        df = self._read_segments_pruned(name, col, probe, report)
+        return df.where(F.col(col).startswith(prefix)), report
 
-    # -- zone-hull pruning (shared by read_pruned / merge / apply_changes) ----
+    #: a merge wave with at most this many distinct keys also probes
+    #: each candidate segment's BLOOM digest (point-wave merges against
+    #: interleaved key ranges prune where min/max can't); past the cap
+    #: the hull decision stands alone — no unbounded driver collect
+    _MERGE_BLOOM_PROBE_KEYS = 64
 
-    @staticmethod
-    def _zone_overlaps(st: dict, lo, hi, want_nulls: bool = False) -> bool:
-        """Can a segment with zone stats `st` contain a row whose value
-        lies in the CLOSED interval [lo, hi] (None = unbounded), or —
-        when `want_nulls` — a NULL? Errs on the side of True (scan)
-        whenever the recorded bounds and the probe aren't cleanly
-        comparable, so pruning is always sound."""
-        if want_nulls and int(st.get("nulls", 0)) > 0:
-            return True
-        zmin, zmax = st.get("min"), st.get("max")
-        if zmin is None and zmax is None:
-            # all-NULL (or empty) segment: no non-null value to match
-            return False
-        lo = _stats_probe(lo) if lo is not None else None
-        hi = _stats_probe(hi) if hi is not None else None
-        if lo is not None:
-            if not _zone_comparable(lo, zmax):
-                return True
-            if zmax < lo:
-                return False
-        if hi is not None:
-            if not _zone_comparable(hi, zmin):
-                return True
-            if zmin > hi:
-                return False
-        return True
+    def _merge_targets(
+        self,
+        name: str,
+        segments: list[dict],
+        on: list[str],
+        source: DataFrame,
+        blooms: bool,
+    ) -> tuple[list[dict], int] | None:
+        """MERGE target pruning: the segments that can hold a row whose
+        key tuple equals SOME source key, by the prune decision. Stage
+        one (one O(source) aggregate) probes each key column with the
+        source's [min, max] hull (and NULLs when a source key is NULL);
+        an equi-match needs every column to agree, so one refuting
+        column drops the segment. Stage two (`blooms`) serves SMALL
+        waves — at most _MERGE_BLOOM_PROBE_KEYS distinct key tuples,
+        one bounded collect, attempted only when a stage-one survivor
+        recorded a digest on a key column: a segment survives only if
+        some tuple passes every column's point probe, which is what a
+        scattered point wave needs when zone ranges interleave.
+        Returns (kept segments, segments dropped by stage two), or
+        None — and runs no job — when no segment recorded stats on a
+        key column."""
 
-    def _source_hull(self, source: DataFrame, on: list[str]) -> dict:
-        """min/max/has-null per key column of a merge source — ONE
-        small aggregate over the wave (O(source), the only job target
-        pruning costs)."""
+        def stats(e: dict, k: str) -> dict | None:
+            return (e.get("stats") or {}).get(k)
+
+        if not any(stats(e, k) for e in segments for k in on):
+            return None
+
         aggs: list = []
         for k in on:
             aggs += [
@@ -2081,118 +2007,41 @@ class TableStore:
                 (F.count(F.lit(1)) - F.count(k)).alias(f"nl__{k}"),
             ]
         row = source.agg(*aggs).first()
-        return {
-            k: (row[f"mn__{k}"], row[f"mx__{k}"], int(row[f"nl__{k}"]) > 0)
+        hull = {
+            k: _Probe(
+                intervals=[(row[f"mn__{k}"], row[f"mx__{k}"], False)]
+                if row[f"mn__{k}"] is not None
+                else [],
+                want_nulls=int(row[f"nl__{k}"]) > 0,
+            )
             for k in on
         }
-
-    @classmethod
-    def _hull_touches(cls, entry: dict, on: list[str], hull: dict) -> bool:
-        """Can this manifest segment contain a row whose key tuple
-        equals SOME source key? False only when a recorded zone range
-        is provably disjoint from the source hull on at least one key
-        column (an equi-match needs EVERY column to agree, so one
-        disjoint column kills the whole segment)."""
-        stats = entry.get("stats") or {}
-        for k in on:
-            st = stats.get(k)
-            if st is None:
-                continue  # no recorded range -> can't prune on k
-            mn, mx, has_null = hull[k]
-            if mn is None and mx is None:
-                # source carries no non-null value for k: only
-                # null-keyed target rows can match
-                if has_null and int(st.get("nulls", 0)) > 0:
-                    continue
-                return False
-            if cls._zone_overlaps(st, mn, mx, want_nulls=has_null):
-                continue
-            return False
-        return True
-
-    #: a merge wave with at most this many distinct keys also probes
-    #: each candidate segment's BLOOM digest (point-wave merges against
-    #: interleaved key ranges prune where min/max can't); past the cap
-    #: the hull decision stands alone — no unbounded driver collect
-    _MERGE_BLOOM_PROBE_KEYS = 64
-
-    def _bloom_prune_targets(
-        self,
-        name: str,
-        source: DataFrame,
-        on: list[str],
-        touched: list[dict],
-    ) -> tuple[list[dict], int]:
-        """Second-stage MERGE target pruning for SMALL waves: when the
-        source key set is tiny, probe each hull-surviving segment's
-        bloom digests with every source key tuple — a segment whose
-        digests reject ALL of them provably holds no match and drops
-        from both the classification join and the DV scope. Zone
-        ranges prune by VALUE ORDER; blooms prune by MEMBERSHIP, which
-        is what a scattered point-wave needs (read_point's logic,
-        vectorized over the wave). COMPOSITE keys probe per-column
-        digests with AND semantics: an equi-match needs every column
-        to agree, so a tuple survives a segment only if each recorded
-        digest admits its column's value (a NULL component or a column
-        without a digest can't refute — it passes). Costs one bounded
-        collect, attempted only when some candidate actually recorded
-        a digest on some key column. Returns (kept_segments,
-        n_bloom_pruned)."""
-        if not touched:
-            return touched, 0
-        if not any(
-            ((e.get("stats") or {}).get(k) or {}).get("bloom")
-            for e in touched
-            for k in on
+        touched = [
+            e
+            for e in segments
+            if all(_skip_reason(stats(e, k), hull[k]) is None for k in on)
+        ]
+        if not blooms or not any(
+            "bloom" in (stats(e, k) or {}) for e in touched for k in on
         ):
             return touched, 0
         cap = self._MERGE_BLOOM_PROBE_KEYS
         rows = source.select(*on).distinct().limit(cap + 1).collect()
         if not rows or len(rows) > cap:
             return touched, 0
-        hmemo: dict[tuple, int] = {}
-
-        def _h(col: str, v) -> int:
-            key = (col, v)
-            if key not in hmemo:
-                hmemo[key] = self._probe_hash(
-                    v, self.schemas[name][col].dataType
-                )
-            return hmemo[key]
-
-        kept: list[dict] = []
-        pruned = 0
-        for e in touched:
-            stats = e.get("stats") or {}
-            blooms: dict[str, tuple[bytes, int, int]] = {}
-            for k in on:
-                b = (stats.get(k) or {}).get("bloom")
-                if b:
-                    blooms[k] = (base64.b64decode(b["bits"]), b["m"], b["k"])
-            if not blooms:
-                kept.append(e)
-                continue
-            hit = False
-            for r in rows:
-                admits = True
-                for k, (bmp, m, kk) in blooms.items():
-                    v = r[k]
-                    if v is None:
-                        continue  # digests don't cover NULLs: pass
-                    if not all(
-                        bmp[p >> 3] & (1 << (p & 7))
-                        for p in _bloom_positions(_h(k, v), m, kk)
-                    ):
-                        admits = False
-                        break
-                if admits:
-                    hit = True
-                    break
-            if not hit:
-                pruned += 1
-                continue
-            kept.append(e)
-        return kept, pruned
+        hash_of = {k: self._hasher(name, k) for k in on}
+        tuples = [
+            {k: _Probe(keys=[r[k]], hash_of=hash_of[k]) for k in on} for r in rows
+        ]
+        kept = [
+            e
+            for e in touched
+            if any(
+                all(_skip_reason(stats(e, k), t[k]) is None for k in on)
+                for t in tuples
+            )
+        ]
+        return kept, len(touched) - len(kept)
 
     def read_pruned(
         self,
@@ -2201,48 +2050,19 @@ class TableStore:
         intervals: list[tuple],
         include_nulls: bool = False,
     ) -> tuple[DataFrame, dict[str, int]]:
-        """Zone-pruned SUPERSET read: skip every segment that provably
-        contains NO row whose `col` falls inside any closed [lo, hi]
-        interval (a None bound is unbounded; `include_nulls` keeps
-        segments holding NULLs). NO row filter is applied — callers
-        compose their own predicates on top, so the result is a
-        superset of the matching rows at a fraction of the scan. This
-        is the primitive behind the engine's due-claim scan
-        (next_crawl <= now reads only segments whose schedule range
-        reaches the past) and the crawl wave's frontier-subtree read;
-        read_prefix is the single-interval string specialization with
-        an exact row filter. Returns (df, {total, zone_skipped,
-        scanned})."""
-        cur = self._current(name)
-        if cur is None:
-            return (
-                local_df(self.spark, [], self.schemas[name]),
-                {"total": 0, "zone_skipped": 0, "scanned": 0},
-            )
-        doc = self._doc(cur)
-        if doc is None:
-            return self._read_gen(name, cur), {
-                "total": 1,
-                "zone_skipped": 0,
-                "scanned": 1,
-            }
-        report = {
-            "total": len(doc["segments"]),
-            "zone_skipped": 0,
-            "scanned": 0,
-        }
-        keep: set[str] = set()
-        for e in doc["segments"]:
-            st = (e.get("stats") or {}).get(col)
-            if st is not None and not any(
-                self._zone_overlaps(st, lo, hi, want_nulls=include_nulls)
-                for (lo, hi) in intervals
-            ):
-                report["zone_skipped"] += 1
-                continue
-            keep.add(_seg_id(e))
-            report["scanned"] += 1
-        return self._read_gen(name, cur, keep=keep), report
+        """Zone-pruned SUPERSET read: keep the segments the prune
+        decision cannot rule out for any CLOSED [lo, hi] interval on
+        `col` (a None bound is unbounded; `include_nulls` also asks for
+        NULLs). NO row filter is applied — callers compose their own
+        predicates on top. The primitive behind the engine's due-claim
+        scan (next_crawl <= now) and the crawl wave's frontier-subtree
+        read. Returns (df, {total, zone_skipped, scanned})."""
+        report = {"total": 0, "zone_skipped": 0, "scanned": 0}
+        probe = _Probe(
+            intervals=[(lo, hi, False) for lo, hi in intervals],
+            want_nulls=include_nulls,
+        )
+        return self._read_segments_pruned(name, col, probe, report), report
 
     def write_with_expectations(
         self, name: str, df: DataFrame, expectations: dict[str, str]
@@ -2655,7 +2475,7 @@ class TableStore:
                 f"replace_where({name!r}): df has rows violating {predicate!r}"
             )
         with _commit_lock(self.root, name):
-            seg = self._write_segment(name, df, "seg")
+            entry = self._write_segment(name, df, None, None, None)
             base = self._base_doc(name)
             # rows where the predicate is NULL do NOT match -> keep them
             notp = f"NOT COALESCE(({predicate}), FALSE)"
@@ -2670,7 +2490,7 @@ class TableStore:
             ]
             self._commit_manifest(
                 name,
-                {"segments": segs + [{"path": seg}], "deletes": base["deletes"]},
+                {"segments": segs + [entry], "deletes": base["deletes"]},
             )
 
     def delete_where(self, name: str, predicate: str) -> None:
@@ -2723,12 +2543,7 @@ class TableStore:
             base = self._base_doc(name)
             if not base["segments"]:
                 return  # nothing to delete from
-            d = self._dir(name)
-            os.makedirs(d, exist_ok=True)
-            dv = f"dv-{time.time_ns()}"
-            keys.select(*key_cols).distinct().write.mode("overwrite").parquet(
-                os.path.join(d, dv)
-            )
+            dv = self._write_dv(name, keys.select(*key_cols), None)
             over = [
                 os.path.basename(e["path"].rstrip("/")) for e in base["segments"]
             ]
@@ -2845,16 +2660,9 @@ class TableStore:
             if self.segment_count(name) <= max_segments and not over_debt:
                 return False
             if (zone_cols or bloom_cols) and not self._is_bucketed(name):
-                seg = self._write_segment(name, self.read(name), "seg")
-                written = self.spark.read.schema(self.schemas[name]).parquet(
-                    os.path.join(self._dir(name), seg)
+                entry = self._write_segment(
+                    name, self.read(name), zone_cols, bloom_cols, None
                 )
-                entry = {
-                    "path": seg,
-                    "stats": self._segment_stats(
-                        written, zone_cols or [], bloom_cols or []
-                    ),
-                }
                 self._commit_manifest(
                     name, {"segments": [entry], "deletes": []}
                 )
@@ -3028,24 +2836,11 @@ class TableStore:
             report = {"mode": "full", "total": 0, "scanned": 0, "pruned": 0}
             if not bucketed and cur is not None:
                 doc0 = self._doc(cur)
-                if (
-                    doc0
-                    and doc0["segments"]
-                    and any(
-                        (e.get("stats") or {}).get(k)
-                        for e in doc0["segments"]
-                        for k in on
-                    )
-                ):
-                    hull = self._source_hull(source, on)
-                    touched = [
-                        e
-                        for e in doc0["segments"]
-                        if self._hull_touches(e, on, hull)
-                    ]
-                    touched, bloom_pruned = self._bloom_prune_targets(
-                        name, source, on, touched
-                    )
+                targets = doc0 and self._merge_targets(
+                    name, doc0["segments"], on, source, blooms=True
+                )
+                if targets:
+                    touched, bloom_pruned = targets
                     report = {
                         "mode": "segments",
                         "total": len(doc0["segments"]),
@@ -3195,28 +2990,18 @@ class TableStore:
                     return metrics
                 if n_changes == 0:
                     return metrics  # nothing differs: write NOTHING
-                d = self._dir(name)
                 doc = {
                     "segments": list(base["segments"]),
                     "deletes": list(base["deletes"]),
                 }
                 if metrics["updated"] or metrics["deleted"]:
-                    dv = f"dv-{time.time_ns()}"
-                    dv_df = (
-                        classified.where(F.col("__op").isin("U", "D"))
-                        .select(
+                    dv = self._write_dv(
+                        name,
+                        classified.where(F.col("__op").isin("U", "D")).select(
                             *[F.col(f"__k_{k}").alias(k) for k in on]
-                        )
-                        .distinct()
+                        ),
+                        metrics["updated"] + metrics["deleted"],
                     )
-                    n_dv = metrics["updated"] + metrics["deleted"]
-                    if not (
-                        self._arrow_small(n_dv)
-                        and self._arrow_write_dir(dv_df, os.path.join(d, dv))
-                    ):
-                        dv_df.write.mode("overwrite").parquet(
-                            os.path.join(d, dv)
-                        )
                     doc["deletes"] = doc["deletes"] + [
                         {
                             "path": dv,
@@ -3233,25 +3018,13 @@ class TableStore:
                         }
                     ]
                 if metrics["updated"] or metrics["inserted"]:
-                    seg = self._write_segment(
+                    entry = self._write_segment(
                         name,
-                        classified.where(F.col("__op").isin("U", "I")).select(
-                            *cols
-                        ),
-                        "seg",
-                        rows_hint=metrics["updated"] + metrics["inserted"],
+                        classified.where(F.col("__op").isin("U", "I")),
+                        zone_cols,
+                        bloom_cols,
+                        metrics["updated"] + metrics["inserted"],
                     )
-                    entry: dict = {"path": seg}
-                    if zone_cols or bloom_cols:
-                        # data-skipping stats on the upsert segment
-                        # (one O(delta) aggregate over the bytes just
-                        # written — same contract as append())
-                        written = self.spark.read.schema(
-                            self.schemas[name]
-                        ).parquet(os.path.join(d, seg))
-                        entry["stats"] = self._segment_stats(
-                            written, zone_cols or [], bloom_cols or []
-                        )
                     doc["segments"] = doc["segments"] + [entry]
                 self._commit_manifest(name, doc)
                 return metrics
@@ -3355,7 +3128,6 @@ class TableStore:
             if not base["segments"]:
                 self.replace(name, iu if iu is not None else empty)
                 return metrics
-            d = self._dir(name)
             doc = {
                 "segments": list(base["segments"]),
                 "deletes": list(base["deletes"]),
@@ -3366,17 +3138,11 @@ class TableStore:
                 dv_keys = dk if dv_keys is None else dv_keys.unionByName(dk)
             if dv_keys is not None:
                 over = [_seg_id(e) for e in base["segments"]]
-                if any(
-                    (e.get("stats") or {}).get(k)
-                    for e in base["segments"]
-                    for k in on
-                ):
-                    hull = self._source_hull(dv_keys, on)
-                    touched = [
-                        e
-                        for e in base["segments"]
-                        if self._hull_touches(e, on, hull)
-                    ]
+                targets = self._merge_targets(
+                    name, base["segments"], on, dv_keys, blooms=False
+                )
+                if targets:
+                    touched, _ = targets
                     over = [_seg_id(e) for e in touched]
                     self.last_merge_report = {
                         "mode": "segments",
@@ -3384,28 +3150,14 @@ class TableStore:
                         "scanned": len(touched),
                         "pruned": len(base["segments"]) - len(touched),
                     }
-                dv = f"dv-{time.time_ns()}"
-                dv_df = dv_keys.distinct()
-                if not (
-                    self._arrow_small(n_upd + n_del)
-                    and self._arrow_write_dir(dv_df, os.path.join(d, dv))
-                ):
-                    dv_df.write.mode("overwrite").parquet(os.path.join(d, dv))
+                dv = self._write_dv(name, dv_keys, n_upd + n_del)
                 doc["deletes"] = doc["deletes"] + [
                     {"path": dv, "keys": list(on), "over": over}
                 ]
             if iu is not None:
-                seg = self._write_segment(
-                    name, iu, "seg", rows_hint=n_ins + n_upd
+                entry = self._write_segment(
+                    name, iu, zone_cols, bloom_cols, n_ins + n_upd
                 )
-                entry: dict = {"path": seg}
-                if zone_cols or bloom_cols:
-                    written = self.spark.read.schema(
-                        self.schemas[name]
-                    ).parquet(os.path.join(d, seg))
-                    entry["stats"] = self._segment_stats(
-                        written, zone_cols or [], bloom_cols or []
-                    )
                 doc["segments"] = doc["segments"] + [entry]
             self._commit_manifest(name, doc)
             return metrics
@@ -3807,6 +3559,8 @@ class TableStore:
             # of being skipped
             seed = self._mv_compute(self._read_gen(src, cur), spec)
             self.schemas.setdefault(view, seed.schema)
+            # persisted, so a store reopened over this root can refresh
+            self._persist_schema(view)
             self.replace(view, seed)
             self._write_cursor(src, f"__mv_{view}", os.path.basename(cur))
             spec["applied"] = os.path.basename(cur)

@@ -445,3 +445,18 @@ def test_mv_minmax_refresh_equals_recompute_generatively(spark, chain):
         got = {(k,): v for k, v in _mm_rows(store).items()}
         want = {(k,): v for k, v in _mm_recompute(store).items()}
         assert got == want
+
+
+def test_refresh_after_reopen_matches_recompute(spark):
+    """A store reopened over the same root (a new process's engine)
+    knows the view's schema, so it can refresh the view."""
+    store = _store(spark)
+    store.replace("src", _df(spark, [(1, "a", 10), (2, "a", 5), (3, "b", 7)]))
+    _mv(store)
+    reopened = TableStore(spark, store.root, {"src": SCHEMA}, bucketing=False)
+    reopened.merge("src", _df(spark, [(2, "b", 5), (4, "c", 1)]), ["id"])
+    assert reopened.refresh_mview("mv")["status"] == "applied"
+    full = reopened._mv_compute(reopened.read("src"), reopened.mview_spec("mv"))
+    assert _rows(reopened) == {
+        r["grp"]: (r["n"], r["total"]) for r in full.collect()
+    }

@@ -742,3 +742,27 @@ def test_bucketed_merge_time_travel_and_fresh_session_fallback(spark, tmp_path):
     st.vacuum(retain=1)
     assert len(st.generations("file")) == 1
     assert st.read("file").count() == 64
+
+
+def test_read_catalog_failure_warns_and_falls_back(spark, tmp_path, monkeypatch, caplog):
+    """A bucketed read whose catalog table fails to resolve falls back
+    to the plain path read — same rows — and says so in the log,
+    naming the table and its generation."""
+    import logging
+    import os
+
+    from pyspark.errors import AnalysisException
+
+    st = _store(spark, tmp_path)
+    gen = os.path.basename(st._current("file"))
+
+    def broken_table(name):
+        raise AnalysisException(f"table {name} is gone")
+
+    monkeypatch.setattr(spark, "table", broken_table)
+    with caplog.at_level(logging.WARNING, logger="file_db_spark.filedb.store"):
+        got = st.read("file")
+    assert got.count() == 64
+    assert any(
+        "'file'" in r.getMessage() and gen in r.getMessage() for r in caplog.records
+    )
