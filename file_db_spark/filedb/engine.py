@@ -26,7 +26,7 @@ from pyspark.sql import types as T
 from ..functions.paths import strip_trailing_slashes
 from . import merge, scan, scheduler, schemas, search, views
 from .hashing import hash_files
-from .store import TableStore, portable_xxhash64
+from .store import TableStore, portable_xxhash64, release_checkpoint
 from ..localframe import local_df
 
 __all__ = ["Engine"]
@@ -186,7 +186,12 @@ class Engine:
                 zone_cols=["dir_path", "next_crawl"],
             )
 
-        listing = scan.scan_dirs(self.spark, frontier).persist()
+        # every frame the wave reuses (the listing here, the merge
+        # scratch slices) is an eager local checkpoint, never a
+        # persist: a cached plan keeps the session's shuffle width
+        # (AQE never coalesces it), so a 10-dir listing would run as
+        # one Python task per shuffle partition
+        listing = scan.scan_dirs(self.spark, frontier).localCheckpoint(eager=True)
         staged_dirs, staged_files = scan.listing_to_catalog_rows(listing)
         crawled = local_df(self.spark, [(p,) for p in frontier], "dir_path string")
         missing = listing.where(F.col("error").isNotNull()).select("dir_path").distinct()
@@ -313,20 +318,12 @@ class Engine:
             zone_cols=["dir_path", "next_crawl"],
         )
         self.store.append("hash_control", f_res.hash_schedule)
-        # one emptiness probe for both queues (two isEmpty calls would
-        # each re-walk their merge lineage)
-        any_removals = (
-            d_res.removal_queue.select(F.lit(1).alias("one"))
-            .limit(1)
-            .unionAll(f_res.removal_queue.select(F.lit(1).alias("one")).limit(1))
-            .take(1)
-        )
-        if any_removals:
+        # the queue sizes were observed when the scratch slices
+        # materialized: no emptiness-probe job
+        if d_res.removal_count or f_res.removal_count:
             self._apply_removals(d_res.removal_queue, f_res.removal_queue, now)
-        listing.unpersist()
-        for scratch in (d_res.scratch, f_res.scratch):
-            if scratch is not None:
-                scratch.unpersist()
+        for frame in (listing, d_res.scratch, f_res.scratch):
+            release_checkpoint(frame)
         self._refresh_mviews()
         return len(frontier)
 
@@ -479,9 +476,19 @@ class Engine:
         have = work.where(F.col("full_path").isNotNull()).select(
             "file_id", "full_path"
         )
-        legacy = work.where(F.col("full_path").isNull()).select("file_id")
+        # one aggregate over the checkpointed claim: its size (the
+        # legacy resolve below is a left join on unique ids, so it
+        # keeps every claimed row) and how many rows lack a path
+        counts = work.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count(F.when(F.col("full_path").isNull(), 1)).alias("legacy"),
+        ).first()
+        n = counts["n"]
+        if n == 0:
+            return 0  # nothing claimed: the control state is unchanged
         todo = have
-        if legacy.limit(1).count() > 0:
+        if counts["legacy"]:
+            legacy = work.where(F.col("full_path").isNull()).select("file_id")
             claimed_ids = F.broadcast(legacy)
             f = (
                 self.store.read("file")
@@ -496,9 +503,6 @@ class Engine:
                 ).alias("full_path"),
             )
             todo = have.unionByName(legacy.join(io_paths, "file_id", "left"))
-        n = todo.count()
-        if n == 0:
-            return 0  # nothing claimed: the control state is unchanged
         staged = hash_files(todo).localCheckpoint(eager=True)
         # entity commit O(changes): bucketed MERGE on the hash table
         # (merge_hashes' M4/M5 clauses — upsert_hashes_into); control

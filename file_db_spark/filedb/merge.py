@@ -11,11 +11,14 @@ Reference semantics replicated (cited into /root/reference):
 - M8 removal-queue drain    DirectoryCrawl.py:1111-1190 (FIFO batches)
 - O5 empty-update suppression on every upsert (848-852, 925-927)
 
-Each function returns NEW DataFrames; persistence is the caller's
-TableStore.replace (Delta MERGE on a cluster). The atomic unit is a
-crawl wave: a directory's full listing lands in one batch, which is
-what makes snapshot-diff deletion safe without the reference's
-flush-ordering guard (SURVEY §7 "what's hard").
+Each function returns NEW DataFrames; committing them is the caller's
+TableStore (apply_changes/merge; Delta MERGE on a cluster). The one
+thing materialized here is merge_directories'/merge_files' O(changes)
+diff slice (`.scratch`): an eager local checkpoint, computed once at
+AQE-coalesced width and released by the caller after its writes.
+The atomic unit is a crawl wave: a directory's full listing lands in
+one batch, which is what makes snapshot-diff deletion safe without the
+reference's flush-ordering guard (SURVEY §7 "what's hard").
 
 Scale: every operation is an equi-join or anti-join on id/dir_path —
 one shuffle each, AQE-skew-safe; dimension-sized sides broadcast.
@@ -30,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..functions.paths import basepath, clamp
 from ..localframe import local_df
+from .store import checkpoint_counting
 
 __all__ = [
     "DirMergeResult",
@@ -66,7 +70,8 @@ class DirMergeResult:
     directory: DataFrame       # new state of the entity table
     new_dirs: DataFrame        # inserted rows (to seed control, M9)
     removal_queue: DataFrame   # vanished dirs -> deferred delete (dir_id, dir_path)
-    scratch: DataFrame | None = None  # persisted change slice; unpersist after the wave's writes
+    removal_count: int         # rows in removal_queue, counted as scratch materialized
+    scratch: DataFrame | None = None  # checkpointed change slice; release after the wave's writes
     inserts: DataFrame | None = None  # full insert rows (store.apply_changes input)
     updates: DataFrame | None = None  # full replacement rows for O5-changed keys
 
@@ -84,8 +89,10 @@ def merge_directories(
     inserts, O5 updates, unchanged, AND (scope-flagged by a broadcast
     probe against the frontier) vanished subdirs — so a crawl wave
     reads `directory` once, not once per derived output (VERDICT r8
-    #2). Only the O(changes) slice is persisted (.scratch); the full
-    entity state stays a lazy projection for snapshot-style callers.
+    #2). Only the O(changes) slice is materialized (.scratch, an eager
+    local checkpoint whose vanished-row count rides the same action as
+    .removal_count); the full entity state stays a lazy projection for
+    snapshot-style callers.
     `directory` may be a zone-pruned SUPERSET read restricted to the
     frontier's subtree hull (store.read_pruned): every row that can
     match a staged path or fall in the vanish scope lives under a
@@ -116,9 +123,11 @@ def merge_directories(
     )
     # the O(changes) slice every downstream output derives from:
     # staged rows (insert/update/unchanged classification) + in-scope
-    # target-only rows (vanished) — persisted so the wave's several
+    # target-only rows (vanished) — checkpointed so the wave's several
     # write actions run the probe join once
-    scratch = j.where(sp | (tp & F.col("__cr").isNotNull())).persist()
+    scratch, counts = checkpoint_counting(
+        j.where(sp | (tp & F.col("__cr").isNotNull())), vanished=tp & ~sp
+    )
     inserts = scratch.where(~tp & sp).select(
         F.col("st.id").alias("id"),
         F.col("st.dir_path").alias("dir_path"),
@@ -160,6 +169,7 @@ def merge_directories(
         directory=state,
         new_dirs=inserts,
         removal_queue=vanished,
+        removal_count=counts["vanished"],
         scratch=scratch,
         inserts=inserts,
         updates=updates,
@@ -174,7 +184,8 @@ class FileMergeResult:
     file: DataFrame            # new state of the entity table
     hash_schedule: DataFrame   # new/changed files to (re)hash (hash_control rows)
     removal_queue: DataFrame   # vanished files -> deferred delete (file_id)
-    scratch: DataFrame | None = None  # persisted change slice; unpersist after the wave's writes
+    removal_count: int         # rows in removal_queue, counted as scratch materialized
+    scratch: DataFrame | None = None  # checkpointed change slice; release after the wave's writes
     inserts: DataFrame | None = None  # full insert rows (store.apply_changes input)
     updates: DataFrame | None = None  # full replacement rows for O5-changed keys
 
@@ -195,8 +206,8 @@ def merge_files(
     Same single-pass shape as merge_directories: ONE full-outer join
     on id classifies inserts, O5 updates, rehash candidates AND
     (scope-flagged by a broadcast probe on dir_id) vanished files, so
-    a crawl wave reads `file` once; only the O(changes) slice
-    persists (.scratch)."""
+    a crawl wave reads `file` once; only the O(changes) slice is
+    materialized (.scratch, with .removal_count)."""
     staged = staged_files.dropDuplicates(["id"])
     ex = file.withColumn("__tp", F.lit(True)).alias("ex")
     st = staged.withColumn("__sp", F.lit(True)).alias("st")
@@ -219,7 +230,9 @@ def merge_files(
         | _neq(F.col("st.ctime"), F.col("ex.ctime"))
         | _neq(F.col("st.atime"), F.col("ex.atime"))
     )
-    scratch = j.where(sp | (tp & F.col("__cr").isNotNull())).persist()
+    scratch, counts = checkpoint_counting(
+        j.where(sp | (tp & F.col("__cr").isNotNull())), vanished=tp & ~sp
+    )
     inserts = scratch.where(~tp & sp).select(
         F.col("st.id").alias("id"),
         F.col("st.name").alias("name"),
@@ -303,6 +316,7 @@ def merge_files(
         file=state,
         hash_schedule=to_hash,
         removal_queue=vanished,
+        removal_count=counts["vanished"],
         scratch=scratch,
         inserts=inserts,
         updates=updates,

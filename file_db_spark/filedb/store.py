@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import base64
 import bisect
+import functools
 import hashlib
 import json
 import logging
@@ -23,7 +24,7 @@ import threading
 import time
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from ..localframe import local_df
@@ -127,6 +128,50 @@ def _seg_id(entry: dict) -> str:
     """Stable identity of a manifest segment entry (its basename —
     what DV `over` lists and data-skipping prune sets key on)."""
     return os.path.basename(entry["path"].rstrip("/"))
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a `localCheckpoint` frame now. Dataset.unpersist
+    only drops CacheManager entries, so a checkpoint otherwise holds its
+    blocks until ContextCleaner sees its RDD garbage-collected."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def checkpoint_counting(
+    df: DataFrame, **conds: Column
+) -> tuple[DataFrame, dict[str, int]]:
+    """Materialize `df` ONCE as an eager local checkpoint, counting the
+    rows that match each named condition on the same action (observed
+    metrics, no second job). Returns (checkpoint, {name: count}).
+
+    A checkpoint, not a persist, for any frame read more than once: a
+    persist leaves the whole lineage in every downstream plan and pins
+    the cache at the session's shuffle width (AQE never coalesces a
+    cached plan); the checkpoint truncates the plan to an RDD leaf at
+    AQE-coalesced width. Free it with release_checkpoint."""
+    obs = Observation()
+    out = df.observe(
+        obs, *[F.count(F.when(c, 1)).alias(n) for n, c in conds.items()]
+    ).localCheckpoint(eager=True)
+    got = obs.get
+    return out, {n: int(got.get(n, 0)) for n in conds}
+
+
+def _checkpoint_ops(tagged: DataFrame) -> tuple[DataFrame, dict[str, int]]:
+    """checkpoint_counting over a classified change frame (`__op` in
+    I/U/D, NULL for an untouched row): the merge metrics dict."""
+    op = F.col("__op")
+    return checkpoint_counting(
+        tagged, inserted=op == "I", updated=op == "U", deleted=op == "D"
+    )
+
+
+def _changed_keys(classified: DataFrame, on: list[str]) -> DataFrame:
+    """The key columns of a classified frame's updated and deleted rows:
+    what a deletion vector masks."""
+    return classified.where(F.col("__op").isin("U", "D")).select(
+        *[F.col(f"__k_{k}").alias(k) for k in on]
+    )
 
 
 def _bloom_positions(h: int, m: int, k: int) -> list[int]:
@@ -823,7 +868,6 @@ class TableStore:
         as commit 0, i.e. older than every vector."""
         meta = self._bucket_meta(gen_dir)
         if meta and meta["dvs"]:
-            import functools
             import operator as _op
 
             table_dir = os.path.dirname(gen_dir)
@@ -1024,9 +1068,7 @@ class TableStore:
         if metrics["updated"] or metrics["deleted"]:
             dv = self._write_dv(
                 name,
-                classified.where(F.col("__op").isin("U", "D")).select(
-                    *[F.col(f"__k_{k}").alias(k) for k in on]
-                ),
+                _changed_keys(classified, on),
                 metrics["updated"] + metrics["deleted"],
             )
             dvs.append({"path": dv, "ns": ns, "keys": list(on)})
@@ -1049,6 +1091,67 @@ class TableStore:
         os.replace(tmp, self._bucket_meta_path(gen))
         self._register_bucketed_gen(name, gen)
         self._catalog_swap({name: os.path.basename(gen)})
+
+    def _commit_classified(
+        self,
+        name: str,
+        classified: DataFrame,
+        on: list[str],
+        metrics: dict[str, int],
+        zone_cols: list[str] | None,
+        bloom_cols: list[str] | None,
+        dv_scope: list[str] | None,
+    ) -> None:
+        """The commit tail merge() and apply_changes share, over a
+        `_checkpoint_ops` frame (`__op`, `__k_<key>`, the table's
+        columns) and its counts. Caller holds the commit lock. A first
+        write replaces the table with the non-deleted rows; otherwise
+        an empty change set writes NOTHING, a bucketed table takes the
+        bucket-aligned MOR commit (_merge_bucketed_commit), and a
+        manifest table gets ONE deletion vector over the U/D keys
+        (scoped to `dv_scope`, else every base segment) plus ONE
+        segment of the U/I rows."""
+        cols = [f.name for f in self.schemas[name].fields]
+        bucketed = self._is_bucketed(name)
+        cur = self._current(name)
+        base = None if bucketed else self._base_doc(name)
+        first_write = (cur is None) if bucketed else not base["segments"]
+        if first_write:
+            self.replace(
+                name,
+                classified.where(
+                    F.col("__op").isNull() | (F.col("__op") != "D")
+                ).select(*cols),
+            )
+            return
+        if not sum(metrics.values()):
+            return
+        if bucketed:
+            self._merge_bucketed_commit(name, cur, classified, on, metrics)
+            return
+        doc = {"segments": list(base["segments"]), "deletes": list(base["deletes"])}
+        if metrics["updated"] or metrics["deleted"]:
+            dv = self._write_dv(
+                name,
+                _changed_keys(classified, on),
+                metrics["updated"] + metrics["deleted"],
+            )
+            # a scope pruned to the segments that can hold a U/D key
+            # spares the other segments the anti-join on every read
+            if dv_scope is None:
+                dv_scope = [_seg_id(e) for e in base["segments"]]
+            doc["deletes"].append({"path": dv, "keys": list(on), "over": dv_scope})
+        if metrics["updated"] or metrics["inserted"]:
+            doc["segments"].append(
+                self._write_segment(
+                    name,
+                    classified.where(F.col("__op").isin("U", "I")),
+                    zone_cols,
+                    bloom_cols,
+                    metrics["updated"] + metrics["inserted"],
+                )
+            )
+        self._commit_manifest(name, doc)
 
     def _base_doc(self, name: str) -> dict:
         """The current generation expressed as manifest entries
@@ -2343,20 +2446,17 @@ class TableStore:
             F.lit("D").alias("op"),
         )
         # the SCD2 delta is O(changed keys); materialize it ONCE with
-        # its row count riding the same action (observed metric), so
-        # the append can take the small-write Arrow path and the write
-        # plans over a leaf instead of re-walking the diff join
-        obs = Observation()
-        out = (
-            upserts.select(*log_cols)
-            .unionByName(deletes.select(*log_cols))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+        # its row count riding the same action, so the append can take
+        # the small-write Arrow path and the write plans over a leaf
+        # instead of re-walking the diff join
+        out, counts = checkpoint_counting(
+            upserts.select(*log_cols).unionByName(deletes.select(*log_cols)),
+            n=F.lit(True),
         )
-        # no unpersist: `out` is a checkpointed frame, and
-        # Dataset.unpersist only releases CacheManager entries — the
-        # checkpoint blocks free via ContextCleaner on GC (ADVICE r10)
-        self.append(name, out, rows_hint=int(obs.get.get("n", 0)))
+        try:
+            self.append(name, out, rows_hint=counts["n"])
+        finally:
+            release_checkpoint(out)
 
     def evolve(self, name: str, new_schema: T.StructType) -> None:
         """Additive schema evolution (the Delta/Iceberg ADD COLUMN
@@ -2792,10 +2892,7 @@ class TableStore:
         wave (_merge_bucketed_commit). Returns metrics
         {'inserted', 'updated', 'deleted'}.
         """
-        import functools
         import operator as _op
-
-        from pyspark.sql import Column
 
         cols = [f.name for f in self.schemas[name].fields]
         data_cols = [c for c in cols if c not in on]
@@ -2926,110 +3023,18 @@ class TableStore:
                 F.coalesce(F.col(f"t.{k}"), F.col(f"s.{k}")).alias(f"__k_{k}")
                 for k in on
             ]
-            # Eager localCheckpoint, not persist: the classified set is
-            # read 3-4 times (metrics count, DV write, segment write,
-            # bucketed commit) and its lineage drags the FULL merge
-            # graph — target read (manifest + DV anti-joins) ⋈ source
-            # (often a CDC diff's own full-outer join). A persist leaves
-            # that tree in every downstream plan (re-analyzed and
-            # AQE-re-walked per action) and pins the cache at session
-            # shuffle width (cached plans are exempt from AQE
-            # coalescing); the checkpoint truncates the plan to an RDD
-            # leaf at AQE-coalesced width — O(changes) bytes wide, not
-            # 32 fixed tasks per downstream job.
-            # merge metrics ride the checkpoint materialization as
-            # observed metrics — the per-op counts arrive with the one
-            # action that computes the classified set, instead of a
-            # second groupBy job over it
-            obs = Observation()
-            classified = (
-                j.withColumn("__op", op)
-                .select("__op", *key_out, *newvals)
-                .observe(
-                    obs,
-                    F.count(F.when(F.col("__op") == "I", 1)).alias("I"),
-                    F.count(F.when(F.col("__op") == "U", 1)).alias("U"),
-                    F.count(F.when(F.col("__op") == "D", 1)).alias("D"),
-                )
-                .localCheckpoint(eager=True)
+            # one materialization of the classified set (metrics ride
+            # it as observed counts), then the tail apply_changes shares
+            classified, metrics = _checkpoint_ops(
+                j.withColumn("__op", op).select("__op", *key_out, *newvals)
             )
             try:
-                counts = obs.get
-                metrics = {
-                    "inserted": int(counts.get("I", 0)),
-                    "updated": int(counts.get("U", 0)),
-                    "deleted": int(counts.get("D", 0)),
-                }
-                n_changes = sum(metrics.values())
-                if bucketed:
-                    if cur is None:
-                        # first write: full replace registers the layout
-                        self.replace(
-                            name,
-                            classified.where(
-                                F.col("__op").isNull() | (F.col("__op") != "D")
-                            ).select(*cols),
-                        )
-                        return metrics
-                    if n_changes == 0:
-                        return metrics  # nothing differs: write NOTHING
-                    # O(changes) bucket-aligned MOR commit — never a
-                    # table rewrite (see _merge_bucketed_commit)
-                    self._merge_bucketed_commit(
-                        name, cur, classified, on, metrics
-                    )
-                    return metrics
-                base = self._base_doc(name)
-                if not base["segments"]:
-                    self.replace(
-                        name,
-                        classified.where(
-                            F.col("__op").isNull() | (F.col("__op") != "D")
-                        ).select(*cols),
-                    )
-                    return metrics
-                if n_changes == 0:
-                    return metrics  # nothing differs: write NOTHING
-                doc = {
-                    "segments": list(base["segments"]),
-                    "deletes": list(base["deletes"]),
-                }
-                if metrics["updated"] or metrics["deleted"]:
-                    dv = self._write_dv(
-                        name,
-                        classified.where(F.col("__op").isin("U", "D")).select(
-                            *[F.col(f"__k_{k}").alias(k) for k in on]
-                        ),
-                        metrics["updated"] + metrics["deleted"],
-                    )
-                    doc["deletes"] = doc["deletes"] + [
-                        {
-                            "path": dv,
-                            "keys": list(on),
-                            # scope the vector to the segments the hull
-                            # actually touched: pruned segments can't
-                            # contain the U/D keys, so they never pay
-                            # the anti-join on read either
-                            "over": (
-                                dv_scope
-                                if dv_scope is not None
-                                else [_seg_id(e) for e in base["segments"]]
-                            ),
-                        }
-                    ]
-                if metrics["updated"] or metrics["inserted"]:
-                    entry = self._write_segment(
-                        name,
-                        classified.where(F.col("__op").isin("U", "I")),
-                        zone_cols,
-                        bloom_cols,
-                        metrics["updated"] + metrics["inserted"],
-                    )
-                    doc["segments"] = doc["segments"] + [entry]
-                self._commit_manifest(name, doc)
+                self._commit_classified(
+                    name, classified, on, metrics, zone_cols, bloom_cols, dv_scope
+                )
                 return metrics
             finally:
-                classified.unpersist()
+                release_checkpoint(classified)
 
     def apply_changes(
         self,
@@ -3055,112 +3060,67 @@ class TableStore:
         carry the key columns; all three key-distinct and mutually
         disjoint — a violated contract multiplies or loses rows
         exactly as it would under Delta's MERGE with a non-distinct
-        source. Commit shape is identical to merge()'s: non-bucketed
+        source. The three frames are tagged into one classified set,
+        materialized ONCE (eager checkpoint, counts observed on the
+        same action — no input lineage runs twice), and committed
+        through merge()'s tail (_commit_classified): non-bucketed
         tables get ONE deletion vector over the updated+deleted keys
         (zone-scoped to the hull-overlapping segments) plus ONE
         upsert segment; bucketed tables get the bucket-aligned MOR
         commit (_merge_bucketed_commit). Returns
         {'inserted','updated','deleted'}."""
         cols = [f.name for f in self.schemas[name].fields]
+        nulls = [
+            F.lit(None).cast(self.schemas[name][c].dataType).alias(c)
+            for c in cols
+        ]
+        parts = [
+            df.select(
+                F.lit(op).alias("__op"),
+                *[F.col(k).alias(f"__k_{k}") for k in on],
+                *(nulls if op == "D" else cols),
+            )
+            for op, df in (("I", inserts), ("U", updates), ("D", deletes))
+            if df is not None
+        ]
         with _commit_lock(self.root, name):
-            n_ins = inserts.count() if inserts is not None else 0
-            n_upd = updates.count() if updates is not None else 0
-            n_del = deletes.count() if deletes is not None else 0
-            metrics = {
-                "inserted": int(n_ins),
-                "updated": int(n_upd),
-                "deleted": int(n_del),
-            }
             self.last_merge_report = {
                 "mode": "changes",
                 "total": 0,
                 "scanned": 0,
                 "pruned": 0,
             }
-            if n_ins + n_upd + n_del == 0:
-                return metrics  # nothing differs: write NOTHING
-            empty = local_df(self.spark, [], self.schemas[name])
-            ins = inserts.select(*cols) if n_ins else None
-            upd = updates.select(*cols) if n_upd else None
-            iu = (
-                ins
-                if upd is None
-                else (upd if ins is None else ins.unionByName(upd))
+            if not parts:
+                return {"inserted": 0, "updated": 0, "deleted": 0}
+            classified, metrics = _checkpoint_ops(
+                functools.reduce(DataFrame.unionByName, parts)
             )
-            cur = self._current(name)
-            if self._is_bucketed(name):
-                if cur is None:
-                    self.replace(name, iu if iu is not None else empty)
-                    return metrics
-
-                def _tag(df: DataFrame, op: str) -> DataFrame:
-                    return df.select(
-                        F.lit(op).alias("__op"),
-                        *[F.col(k).alias(f"__k_{k}") for k in on],
-                        *cols,
+            try:
+                if not sum(metrics.values()):
+                    return metrics  # nothing differs: write NOTHING
+                dv_scope = None
+                masks = metrics["updated"] or metrics["deleted"]
+                if masks and not self._is_bucketed(name):
+                    segments = self._base_doc(name)["segments"]
+                    targets = self._merge_targets(
+                        name, segments, on, _changed_keys(classified, on),
+                        blooms=False,
                     )
-
-                parts: list[DataFrame] = []
-                if ins is not None:
-                    parts.append(_tag(ins, "I"))
-                if upd is not None:
-                    parts.append(_tag(upd, "U"))
-                if n_del:
-                    nulls = [
-                        F.lit(None)
-                        .cast(self.schemas[name][c].dataType)
-                        .alias(c)
-                        for c in cols
-                    ]
-                    parts.append(
-                        deletes.select(
-                            F.lit("D").alias("__op"),
-                            *[F.col(k).alias(f"__k_{k}") for k in on],
-                            *nulls,
-                        )
-                    )
-                classified = parts[0]
-                for p in parts[1:]:
-                    classified = classified.unionByName(p)
-                self._merge_bucketed_commit(name, cur, classified, on, metrics)
-                return metrics
-            base = self._base_doc(name)
-            if not base["segments"]:
-                self.replace(name, iu if iu is not None else empty)
-                return metrics
-            doc = {
-                "segments": list(base["segments"]),
-                "deletes": list(base["deletes"]),
-            }
-            dv_keys = upd.select(*on) if n_upd else None
-            if n_del:
-                dk = deletes.select(*on)
-                dv_keys = dk if dv_keys is None else dv_keys.unionByName(dk)
-            if dv_keys is not None:
-                over = [_seg_id(e) for e in base["segments"]]
-                targets = self._merge_targets(
-                    name, base["segments"], on, dv_keys, blooms=False
+                    if targets:
+                        touched, _ = targets
+                        dv_scope = [_seg_id(e) for e in touched]
+                        self.last_merge_report = {
+                            "mode": "segments",
+                            "total": len(segments),
+                            "scanned": len(touched),
+                            "pruned": len(segments) - len(touched),
+                        }
+                self._commit_classified(
+                    name, classified, on, metrics, zone_cols, bloom_cols, dv_scope
                 )
-                if targets:
-                    touched, _ = targets
-                    over = [_seg_id(e) for e in touched]
-                    self.last_merge_report = {
-                        "mode": "segments",
-                        "total": len(base["segments"]),
-                        "scanned": len(touched),
-                        "pruned": len(base["segments"]) - len(touched),
-                    }
-                dv = self._write_dv(name, dv_keys, n_upd + n_del)
-                doc["deletes"] = doc["deletes"] + [
-                    {"path": dv, "keys": list(on), "over": over}
-                ]
-            if iu is not None:
-                entry = self._write_segment(
-                    name, iu, zone_cols, bloom_cols, n_ins + n_upd
-                )
-                doc["segments"] = doc["segments"] + [entry]
-            self._commit_manifest(name, doc)
-            return metrics
+                return metrics
+            finally:
+                release_checkpoint(classified)
 
     def commit_multi(
         self,
@@ -3594,7 +3554,6 @@ class TableStore:
         scan filtered to the retracted-extreme groups — O(changed
         groups) decision, O(recomputed groups) fallback, never a view
         recompute."""
-        import functools
         import operator as _op
 
         group_by = spec["group_by"]

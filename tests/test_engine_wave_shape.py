@@ -75,6 +75,39 @@ def test_one_read_per_table_per_wave(spark, tmp_path, tree, monkeypatch):
     assert counts.get("hash_control", 0) == 1
 
 
+def test_steady_wave_stages_narrower_than_shuffle_width(spark, tmp_path, tree):
+    """No stage of a steady crawl wave launches one task per shuffle
+    partition: the frames the wave reuses (listing, diff slices, commit
+    change sets) are eager checkpoints at AQE-coalesced width, not
+    persists pinned at `spark.sql.shuffle.partitions`."""
+    eng = _mk_engine(spark, tmp_path)
+    eng.add_root(str(tree))
+    while eng.crawl_once(limit=100):
+        pass
+    sc = spark.sparkContext
+    width = 64
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(width))
+    group = f"steady-wave-{id(eng)}"
+    try:
+        sc.setJobGroup(group, "steady crawl wave")
+        later = _e._utcnow() + timedelta(days=8)
+        assert eng.crawl_once(now=later, limit=100) == 3
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    tracker = sc.statusTracker()
+    tasks = [
+        info.numCompletedTasks
+        for job in tracker.getJobIdsForGroup(group)
+        for stage in (tracker.getJobInfo(job) or ()).stageIds
+        if (info := tracker.getStageInfo(stage)) is not None
+    ]
+    assert tasks, "the wave's jobs carry the job group"
+    assert max(tasks) < width
+
+
 def test_file_probe_prunes_disjoint_wave_files(spark, tmp_path):
     """The M2 probe scans ONLY the `file` data files whose per-file
     dir_id digests can hold a frontier dir_id: after two disjoint

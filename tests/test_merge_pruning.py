@@ -192,6 +192,62 @@ def test_apply_changes_bucketed(spark, tmp_path):
     assert debt.get("waves", 0) == 1 and debt["deletes"] == 1
 
 
+def _counted(df, acc):
+    """`df` behind a mapInPandas that adds every row it emits to `acc`:
+    the accumulator counts rows times evaluations of the lineage."""
+
+    def bump(batches):
+        for pdf in batches:
+            acc.add(len(pdf))
+            yield pdf
+
+    return df.mapInPandas(bump, df.schema)
+
+
+def test_apply_changes_evaluates_each_input_once(spark, tmp_path):
+    """apply_changes materializes its change set once: the insert,
+    update and delete frames' lineages each run exactly one time, on a
+    manifest table (DV + segment commit) and on the bucketed `file`
+    table (bucket-aligned commit) alike."""
+    acc = spark.sparkContext.accumulator(0)
+    st = _seeded(spark, tmp_path)
+    m = st.apply_changes(
+        "t",
+        ["k"],
+        inserts=_counted(_kv(spark, [("c1", 30), ("c2", 31)]), acc),
+        updates=_counted(_kv(spark, [("a4", 40)]), acc),
+        deletes=_counted(spark.createDataFrame([("b0",)], "k string"), acc),
+        zone_cols=["k"],
+    )
+    assert m == {"inserted": 2, "updated": 1, "deleted": 1}
+    assert acc.value == 4
+    got = {r["k"]: r["v"] for r in st.read("t").collect()}
+    assert got["c1"] == 30 and got["c2"] == 31 and got["a4"] == 40
+    assert "b0" not in got and len(got) == 11
+
+    acc = spark.sparkContext.accumulator(0)
+    bst = _store(spark, tmp_path / "bkt", {"file": BKT_SCHEMA}, bucketing=True)
+    bst.replace(
+        "file",
+        spark.range(20).select(
+            F.col("id"), F.concat(F.lit("p"), F.col("id")).alias("payload")
+        ),
+    )
+    row = "id long, payload string"
+    m = bst.apply_changes(
+        "file",
+        ["id"],
+        inserts=_counted(spark.createDataFrame([(100, "new")], row), acc),
+        updates=_counted(spark.createDataFrame([(3, "upd"), (4, "upd")], row), acc),
+        deletes=_counted(spark.createDataFrame([(9,)], "id long"), acc),
+    )
+    assert m == {"inserted": 1, "updated": 2, "deleted": 1}
+    assert acc.value == 4
+    got = {r["id"]: r["payload"] for r in bst.read("file").collect()}
+    assert got[100] == "new" and got[3] == got[4] == "upd"
+    assert 9 not in got and len(got) == 20
+
+
 def test_read_pruned_timestamp_zone_maps(spark, tmp_path):
     st = _store(spark, tmp_path, {"c": TS_SCHEMA})
 
